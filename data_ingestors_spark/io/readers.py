@@ -18,6 +18,7 @@ import csv
 import io
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -71,13 +72,61 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
     parquet reader rejects — read nanos as long (legacy conf) and
     convert to a microsecond TimestampType column.
+
+    The resolved DataFrame is memoised on the session object, so a
+    repeated call returns the same DataFrame and starts no Spark job
+    (resolving runs a schema-inference job and a fresh analysis). The
+    memo is keyed by the table's qualified path and a fingerprint of
+    its files: the length and modification time of the file, or of
+    every leaf file under a directory table. A change to the table's
+    files is seen on the next call after the change: a rewritten or
+    extended table no longer matches its fingerprint and is resolved
+    again. A rewrite that keeps every file's length and modification
+    time (at the file system's resolution) is not seen. Each session,
+    including one from ``spark.newSession()``, has its own memo, which
+    goes with it.
     """
     tune(spark)
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        key, fingerprint = _fingerprint(spark, path)
+    except Py4JJavaError:  # e.g. a missing path: the read raises Spark's error
+        return _resolve(spark, path, name)
+    # The memo hangs off the session object rather than a
+    # WeakKeyDictionary keyed by it: every memoised DataFrame references
+    # its session, which would keep such a key alive for good.
+    memo = vars(spark).setdefault("_resolved_tables", {})
+    hit = memo.get(key)
+    if hit is not None and hit[0] == fingerprint:
+        return hit[1]
+    df = _resolve(spark, path, name)
+    memo[key] = (fingerprint, df)
+    return df
+
+
+def _fingerprint(spark: SparkSession, path: str) -> tuple[str, tuple]:
+    """The qualified path and the (path, length, modification time) of
+    each leaf file behind it, read through Hadoop's FileSystem so local
+    and remote URIs take one code path."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    status = fs.getFileStatus(jpath)
+    if status.isFile():
+        return status.getPath().toString(), ((status.getLen(), status.getModificationTime()),)
+    leaves = []
+    files = fs.listFiles(jpath, True)
+    while files.hasNext():
+        f = files.next()
+        leaves.append((f.getPath().toString(), f.getLen(), f.getModificationTime()))
+    return status.getPath().toString(), tuple(sorted(leaves))
+
+
+def _resolve(spark: SparkSession, path: str, name: str) -> DataFrame:
+    df = spark.read.parquet(path)
     for field in df.schema.fields:
         if name == "events" and field.name == "ts" and isinstance(field.dataType, T.LongType):
             # integer division: ns epochs ~1.7e18 exceed double precision
@@ -92,6 +141,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
+    """Load the named benchmark tables (all of ``TABLES`` by default)
+    through ``load_table`` and its per-session memo."""
     return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
 
 

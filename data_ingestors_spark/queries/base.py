@@ -2,17 +2,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from data_ingestors_spark.io.readers import TABLES, load_table
-from data_ingestors_spark.session import tune
-
-
-def tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Load the named benchmark tables (UTC session tz asserted)."""
-    tune(spark)
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
+# the registry's one table loader (UTC session tz asserted per table)
+from data_ingestors_spark.io.readers import load_tables as tables
 
 
 def views(spark: SparkSession, sf_dir: str, *names: str) -> SparkSession:
